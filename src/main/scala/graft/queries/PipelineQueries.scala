@@ -146,7 +146,7 @@ object PipelineQueries {
     * init key is md5 — cross-engine replayable); per-(vector, cell)
     * quantization error quantizes to LONG micros FIRST and cell
     * assignment is the argmin over those INTEGERS with ties to the
-    * lowest cell — mirroring Similarity.withQuantizedCell, so no raw
+    * lowest cell — mirroring Similarity.pqCodeRows, so no raw
     * double comparison decides a row on either engine (judge r17 ask
     * #1: the raw-cosine argmax near-ties structurally at iters = 0,
     * where the sampled codebook can hold a vector and its scaled copy,

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -112,7 +112,7 @@ object StreamParity {
     // duplicates, and per-phase outputs are the phase's NEW batch ids in
     // batch order (Update-mode merges rely on that order)
     val batches =
-      new java.util.concurrent.ConcurrentHashMap[Long, Array[org.apache.spark.sql.Row]]()
+      new java.util.concurrent.ConcurrentHashMap[Long, Array[Row]]()
     try withCertificateShuffle(spark) {
       phases.map { steps =>
         val before = batches.keySet().asScala.toSet
@@ -135,12 +135,11 @@ object StreamParity {
             spark.sparkContext.parallelize(phaseRows, 1), stream.schema)
           .as[O].collect().toSeq
       }
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(new java.io.File(ckpt))
-    }
+    } finally rmTree(new java.io.File(ckpt))
+  }
+
+  private def rmTree(f: java.io.File): Unit = {
+    Option(f.listFiles).foreach(_.foreach(rmTree)); f.delete(): Unit
   }
 
   /** Gap sessionization parity (streaming twin of q_events_sessionize,
@@ -331,6 +330,44 @@ object StreamParity {
     collected.toDF("canon_url", "host").orderBy("canon_url")
   }
 
+  /** The restart-certificate driver of the MAINTAINED index streams:
+    * `start` launches the family's maintained stream over a MemoryStream
+    * of `cols` with a callback that collects each batch's frozen output
+    * by batch id; `drive` receives `run(rows)` — one query START on the
+    * shared checkpoint, fed `rows`, drained and stopped, returning every
+    * batch output so far in batch-id order — and returns the rows to
+    * emit as `schema` (a DDL string). Each `run` after the first must
+    * recover its source offsets and the durable commit guard from disk.
+    * The checkpoint and the index (tables, side tables, commits table)
+    * are dropped on exit. Constant-size fixtures (class-doc discipline);
+    * the callback collect is bounded harness plumbing, production
+    * callers write the frame to a sink table. */
+  private def maintainedParity[I: org.apache.spark.sql.Encoder](
+      spark: SparkSession, layout: graft.operators.IndexStore.IndexLayout,
+      tag: String, cols: Seq[String], schema: String)(
+      start: (DataFrame, String, (Long, DataFrame) => Unit) =>
+        org.apache.spark.sql.streaming.StreamingQuery)(
+      drive: (Seq[I] => Seq[Row]) => Seq[Row]): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val mem = MemoryStream[I]
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_").toString
+    val batches = new java.util.concurrent.ConcurrentHashMap[Long, Array[Row]]()
+    def run(rows: Seq[I]): Seq[Row] = {
+      val q = start(mem.toDS().toDF(cols: _*), ckpt,
+        (id, out) => batches.put(id, out.collect()): Unit)
+      try { mem.addData(rows: _*); q.processAllAvailable() }
+      finally q.stop()
+      batches.keySet().asScala.toSeq.sorted.flatMap(id => batches.get(id))
+    }
+    try spark.createDataFrame(spark.sparkContext.parallelize(drive(run), 1),
+      org.apache.spark.sql.types.StructType.fromDDL(schema))
+    finally {
+      rmTree(new java.io.File(ckpt))
+      graft.operators.IndexStore.drop(spark, layout, tag)
+    }
+  }
+
   /** MAINTAINED streaming dedup parity UNDER RESTART (judge r14 ask
     * #5 — the recovered-state discipline, index flavor): phase 1 streams
     * a batch of novel docs (every 5th of the slice) plus copies of
@@ -354,57 +391,25 @@ object StreamParity {
                             tau: Double = 0.5): DataFrame = {
     import spark.implicits._
     import graft.operators.Dedup
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     withCertificateShuffle(spark) {
-    val slice = Tables.documents(spark, sfDir).orderBy("doc_id")
-      .limit(sliceDocs)
-      .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
-    val corpus = slice.filter(col("doc_id") % 5 =!= 0)
-    val tag = sfDir + "_smaint"
-    Dedup.writeMinhashIndex(corpus, "doc_id", "text", tag)
-    val b1 = slice.filter(col("doc_id") % 5 === 0)
-      .unionByName(corpus.filter(col("doc_id") % 7 === 0)
-        .select((col("doc_id") + 100000L).as("doc_id"), col("text")))
-      .as[(Long, String)].collect().toSeq.sortBy(_._1)
-    val mem = MemoryStream[(Long, String)]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_").toString
-    val batches =
-      new java.util.concurrent.ConcurrentHashMap[Long, Array[org.apache.spark.sql.Row]]()
-    def runPhase(rows: Seq[(Long, String)]): Unit = {
-      // the DataFrame callback is collected HERE only — a bounded test
-      // fixture; production callers write it to a sink table instead
-      val q = EventStreams.minhashDedupStreamMaintained(
-        mem.toDS().toDF("doc_id", "text"), "doc_id", "text", tag, tau,
-        ckpt, (id, out) => batches.put(id, out.collect()): Unit)
-      try { mem.addData(rows: _*); q.processAllAvailable() }
-      finally q.stop()
-    }
-    try {
-      runPhase(b1)
-      import scala.jdk.CollectionConverters._
-      val matched1 = batches.values.asScala.flatten.map(_.getLong(0)).toSet
-      val admitted = b1.filter(t => !matched1.contains(t._1))
-      runPhase(admitted.map(t => (t._1 + 200000L, t._2)))
-      val all = batches.keySet().asScala.toSeq.sorted
-        .flatMap(id => batches.get(id))
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("batch_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("corpus_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("jaccard",
-          org.apache.spark.sql.types.DoubleType)))
-      spark.createDataFrame(spark.sparkContext.parallelize(all, 1), schema)
-        .orderBy("batch_id", "corpus_id")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(new java.io.File(ckpt))
-      val (bt, st) = Dedup.indexTables(tag)
-      Seq(bt, st, Dedup.commitsTableName(bt))
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    }
+      val slice = Tables.documents(spark, sfDir).orderBy("doc_id")
+        .limit(sliceDocs)
+        .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
+      val corpus = slice.filter(col("doc_id") % 5 =!= 0)
+      val tag = sfDir + "_smaint"
+      Dedup.writeMinhashIndex(corpus, "doc_id", "text", tag)
+      val b1 = slice.filter(col("doc_id") % 5 === 0)
+        .unionByName(corpus.filter(col("doc_id") % 7 === 0)
+          .select((col("doc_id") + 100000L).as("doc_id"), col("text")))
+        .as[(Long, String)].collect().toSeq.sortBy(_._1)
+      maintainedParity[(Long, String)](spark, Dedup.MinhashLayout, tag,
+          Seq("doc_id", "text"), "batch_id BIGINT, corpus_id BIGINT, jaccard DOUBLE")(
+          EventStreams.minhashDedupStreamMaintained(_, "doc_id", "text", tag,
+            tau, _, _)) { run =>
+        val matched1 = run(b1).map(_.getLong(0)).toSet
+        run(b1.filter(t => !matched1.contains(t._1))
+          .map(t => (t._1 + 200000L, t._2)))
+      }.orderBy("batch_id", "corpus_id")
     }
   }
 
@@ -428,60 +433,30 @@ object StreamParity {
                             tau: Double = 0.995): DataFrame = {
     import spark.implicits._
     import graft.operators.Dedup
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     withCertificateShuffle(spark) {
-    val slice = Tables.embeddings(spark, sfDir).orderBy("vec_id")
-      .limit(sliceVecs)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val corpus = slice.filter(col("vec_id") % 5 =!= 0)
-      .select(col("vec_id"), col("v").as("embedding"))
-    val tag = sfDir + "_semaint"
-    Dedup.writeEmbedIndex(corpus, "vec_id", "embedding", tag,
-      bits = 16, tables = 8)
-    val b1 = slice.filter(col("vec_id") % 5 === 0)
-      .select(col("vec_id"), col("v"))
-      .unionByName(slice.filter(col("vec_id") % 5 =!= 0 &&
-          col("vec_id") % 7 === 0)
-        .select((col("vec_id") + 100000L).as("vec_id"),
-          transform(col("v"), x => x * lit(1.5d)).as("v")))
-      .as[(Long, Seq[Double])].collect().toSeq.sortBy(_._1)
-    val mem = MemoryStream[(Long, Seq[Double])]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_").toString
-    val batches =
-      new java.util.concurrent.ConcurrentHashMap[Long, Array[org.apache.spark.sql.Row]]()
-    def runPhase(rows: Seq[(Long, Seq[Double])]): Unit = {
-      val q = EventStreams.embedDedupStreamMaintained(
-        mem.toDS().toDF("vec_id", "embedding"), "vec_id", "embedding",
-        tag, tau, ckpt, (id, out) => batches.put(id, out.collect()): Unit)
-      try { mem.addData(rows: _*); q.processAllAvailable() }
-      finally q.stop()
-    }
-    try {
-      runPhase(b1)
-      import scala.jdk.CollectionConverters._
-      val matched1 = batches.values.asScala.flatten.map(_.getLong(0)).toSet
-      val admitted = b1.filter(t => !matched1.contains(t._1))
-      runPhase(admitted.map(t => (t._1 + 200000L, t._2.map(_ * 2.0))))
-      val all = batches.keySet().asScala.toSeq.sorted
-        .flatMap(id => batches.get(id))
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("batch_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("corpus_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("cos",
-          org.apache.spark.sql.types.DoubleType)))
-      spark.createDataFrame(spark.sparkContext.parallelize(all, 1), schema)
-        .orderBy("batch_id", "corpus_id")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(new java.io.File(ckpt))
-      val (sigT, vecT) = Dedup.embedIndexTables(tag)
-      Seq(sigT, vecT, Dedup.commitsTableName(sigT))
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    }
+      val slice = Tables.embeddings(spark, sfDir).orderBy("vec_id")
+        .limit(sliceVecs)
+        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      val corpus = slice.filter(col("vec_id") % 5 =!= 0)
+        .select(col("vec_id"), col("v").as("embedding"))
+      val tag = sfDir + "_semaint"
+      Dedup.writeEmbedIndex(corpus, "vec_id", "embedding", tag,
+        bits = 16, tables = 8)
+      val b1 = slice.filter(col("vec_id") % 5 === 0)
+        .select(col("vec_id"), col("v"))
+        .unionByName(slice.filter(col("vec_id") % 5 =!= 0 &&
+            col("vec_id") % 7 === 0)
+          .select((col("vec_id") + 100000L).as("vec_id"),
+            transform(col("v"), x => x * lit(1.5d)).as("v")))
+        .as[(Long, Seq[Double])].collect().toSeq.sortBy(_._1)
+      maintainedParity[(Long, Seq[Double])](spark, Dedup.EmbedLayout, tag,
+          Seq("vec_id", "embedding"), "batch_id BIGINT, corpus_id BIGINT, cos DOUBLE")(
+          EventStreams.embedDedupStreamMaintained(_, "vec_id", "embedding",
+            tag, tau, _, _)) { run =>
+        val matched1 = run(b1).map(_.getLong(0)).toSet
+        run(b1.filter(t => !matched1.contains(t._1))
+          .map(t => (t._1 + 200000L, t._2.map(_ * 2.0))))
+      }.orderBy("batch_id", "corpus_id")
     }
   }
 
@@ -511,70 +486,39 @@ object StreamParity {
   def annMaintainedParity(spark: SparkSession, sfDir: String,
                           sliceVecs: Int = 400): DataFrame = {
     import spark.implicits._
-    import graft.operators.{Dedup, Similarity}
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import graft.operators.Similarity
     withCertificateShuffle(spark) {
-    val slice = Tables.embeddings(spark, sfDir).orderBy("vec_id")
-      .limit(sliceVecs)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val scales = graft.queries.PipelineQueries.AnnScales
-    val corpus = slice.select(col("vec_id"), col("v").as("embedding"))
-      .unionByName(slice.filter(col("vec_id") < 5)
-        .select(col("vec_id"), col("v"),
-          posexplode(array(scales.map(lit): _*)).as(Seq("j", "sc")))
-        .select((lit(100000L) + col("vec_id") * 100 + col("j")).as("vec_id"),
-          transform(col("v"), x => x * col("sc")).as("embedding")))
-    val tag = sfDir + "_sannm"
-    Similarity.writeAnnIndex(corpus, "vec_id", "embedding", tag)
-    val qvecs = slice.filter(col("vec_id") < 5)
-    val inserts = qvecs
-      .select(col("vec_id"), col("v"), posexplode(array(
-        lit(2.2d), lit(2.3d), lit(2.4d))).as(Seq("j", "sc")))
-      .select((lit(300000L) + col("vec_id") * 100 + col("j")).as("vec_id"),
-        transform(col("v"), x => x * col("sc")).as("v"))
-      .as[(Long, Seq[Double])].collect().toSeq.sortBy(_._1)
-    val phase2 = qvecs
-      .select((col("vec_id") + 900000L).as("vec_id"),
-        transform(col("v"), x => x * lit(0.9d)).as("v"))
-      .as[(Long, Seq[Double])].collect().toSeq.sortBy(_._1)
-    val mem = MemoryStream[(Long, Seq[Double])]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_").toString
-    val batches =
-      new java.util.concurrent.ConcurrentHashMap[Long, Array[org.apache.spark.sql.Row]]()
-    def runPhase(rows: Seq[(Long, Seq[Double])]): Unit = {
-      val q = EventStreams.annStreamMaintained(
-        mem.toDS().toDF("vec_id", "embedding"), "vec_id", "embedding",
-        tag, k = 14, ckpt, (id, out) => batches.put(id, out.collect()): Unit)
-      try { mem.addData(rows: _*); q.processAllAvailable() }
-      finally q.stop()
-    }
-    try {
-      runPhase(inserts)
-      runPhase(phase2)
-      import scala.jdk.CollectionConverters._
-      val all = batches.keySet().asScala.toSeq.sorted
-        .flatMap(id => batches.get(id))
-        .filter(_.getLong(0) >= 900000L)
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("query_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("rank",
-          org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("neighbor_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("cos",
-          org.apache.spark.sql.types.DoubleType)))
-      spark.createDataFrame(spark.sparkContext.parallelize(all, 1), schema)
-        .orderBy("query_id", "rank")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(new java.io.File(ckpt))
-      val (codesT, vecsT, coarseT, pqT) = Similarity.annIndexTables(tag)
-      (Seq(codesT, vecsT, coarseT, pqT) :+ Dedup.commitsTableName(codesT))
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    }
+      val slice = Tables.embeddings(spark, sfDir).orderBy("vec_id")
+        .limit(sliceVecs)
+        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      val scales = graft.queries.PipelineQueries.AnnScales
+      val corpus = slice.select(col("vec_id"), col("v").as("embedding"))
+        .unionByName(slice.filter(col("vec_id") < 5)
+          .select(col("vec_id"), col("v"),
+            posexplode(array(scales.map(lit): _*)).as(Seq("j", "sc")))
+          .select((lit(100000L) + col("vec_id") * 100 + col("j")).as("vec_id"),
+            transform(col("v"), x => x * col("sc")).as("embedding")))
+      val tag = sfDir + "_sannm"
+      Similarity.writeAnnIndex(corpus, "vec_id", "embedding", tag)
+      val qvecs = slice.filter(col("vec_id") < 5)
+      val inserts = qvecs
+        .select(col("vec_id"), col("v"), posexplode(array(
+          lit(2.2d), lit(2.3d), lit(2.4d))).as(Seq("j", "sc")))
+        .select((lit(300000L) + col("vec_id") * 100 + col("j")).as("vec_id"),
+          transform(col("v"), x => x * col("sc")).as("v"))
+        .as[(Long, Seq[Double])].collect().toSeq.sortBy(_._1)
+      val phase2 = qvecs
+        .select((col("vec_id") + 900000L).as("vec_id"),
+          transform(col("v"), x => x * lit(0.9d)).as("v"))
+        .as[(Long, Seq[Double])].collect().toSeq.sortBy(_._1)
+      maintainedParity[(Long, Seq[Double])](spark, Similarity.AnnLayout, tag,
+          Seq("vec_id", "embedding"),
+          "query_id BIGINT, rank INT, neighbor_id BIGINT, cos DOUBLE")(
+          EventStreams.annStreamMaintained(_, "vec_id", "embedding", tag,
+            k = 14, _, _)) { run =>
+        run(inserts)
+        run(phase2).filter(_.getLong(0) >= 900000L)
+      }.orderBy("query_id", "rank")
     }
   }
 

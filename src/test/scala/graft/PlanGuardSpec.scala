@@ -485,10 +485,10 @@ class PlanGuardSpec extends SparkSpec {
       assert(snapshot(coarseT) == coarseBefore && snapshot(pqT) == pqBefore,
         "removeFromAnnIndex must not touch the codebooks")
       // subtractive fingerprint: corpus ∪ surviving insert verifies
-      val fp = Dedup.corpusFingerprint(e.unionByName(ins2),
+      val fp = graft.operators.IndexStore.corpusFingerprint(e.unionByName(ins2),
         "vec_id", "embedding")
       assert(Seq(codesT, vecsT, coarseT, pqT).forall(t =>
-        Dedup.tableFingerprint(spark, t).contains(fp)),
+        graft.operators.IndexStore.tableFingerprint(spark, t).contains(fp)),
         "fingerprint did not subtract to corpus ∪ survivors")
       val wantServe = serve(2).collect().map(_.toSeq).toSeq
       // crash park self-heal on the PARTITIONED table: park codes under

@@ -28,13 +28,13 @@ class DedupSpec extends SparkSpec {
     Seq((1L, "x")).toDF("corpus_id", "t")
       .write.format("parquet").saveAsTable(idx)
     try {
-      val ct = Dedup.ensureCommitsTable(spark, idx)
-      Dedup.recordCommit(spark, ct, 3L, "3:30")
-      Dedup.recordCommit(spark, ct, 7L, "7:70")
+      val ct = IndexStore.ensureCommitsTable(spark, idx)
+      IndexStore.recordCommit(spark, ct, 3L, "3:30")
+      IndexStore.recordCommit(spark, ct, 7L, "7:70")
       for (id <- Seq(-1L, 0L, 3L, 7L, 8L)) {
-        val probe = Dedup.commitsProbe(spark, ct, id)
-        assert(probe == (Dedup.committedBatch(spark, ct, id),
-          Dedup.lastCommittedFp(spark, ct)), s"probe mismatch at $id: $probe")
+        val probe = IndexStore.commitsProbe(spark, ct, id)
+        assert(probe == (IndexStore.committedBatch(spark, ct, id),
+          IndexStore.lastCommittedFp(spark, ct)), s"probe mismatch at $id: $probe")
       }
     } finally Seq(idx, Dedup.commitsTableName(idx))
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
@@ -750,7 +750,7 @@ class DedupSpec extends SparkSpec {
   test("index tag stems are collision-resistant where hashCode is not " +
        "(advisor r13)") {
     assert("Aa".hashCode == "BB".hashCode) // the classic Java collision
-    assert(Dedup.tagStem("Aa") != Dedup.tagStem("BB"))
+    assert(IndexStore.tagStem("Aa") != IndexStore.tagStem("BB"))
     assert(Dedup.indexTables("Aa") != Dedup.indexTables("BB"))
   }
 
@@ -823,10 +823,10 @@ class DedupSpec extends SparkSpec {
     // the merged fingerprint equals the union corpus's (additive), so
     // ensure over corpus ∪ admitted verifies without a rebuild
     val (bt, st) = Dedup.indexTables(tag)
-    val unionFp = Dedup.corpusFingerprint(
+    val unionFp = IndexStore.corpusFingerprint(
       corpus.unionByName(admitted), "doc_id", "text")
-    assert(Dedup.tableFingerprint(spark, bt).contains(unionFp))
-    assert(Dedup.tableFingerprint(spark, st).contains(unionFp))
+    assert(IndexStore.tableFingerprint(spark, bt).contains(unionFp))
+    assert(IndexStore.tableFingerprint(spark, st).contains(unionFp))
     Seq(bt, st).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
@@ -942,10 +942,10 @@ class DedupSpec extends SparkSpec {
     assert(hits2 == Seq((200L, 100L)), s"embed append did not land: $hits2")
     // additive fingerprint: ensure over corpus ∪ admitted verifies
     val (sigT, vecT) = Dedup.embedIndexTables(tag)
-    val unionFp = Dedup.corpusFingerprint(
+    val unionFp = IndexStore.corpusFingerprint(
       corpus.unionByName(admitted), "vec_id", "embedding")
-    assert(Dedup.tableFingerprint(spark, sigT).contains(unionFp))
-    assert(Dedup.tableFingerprint(spark, vecT).contains(unionFp))
+    assert(IndexStore.tableFingerprint(spark, sigT).contains(unionFp))
+    assert(IndexStore.tableFingerprint(spark, vecT).contains(unionFp))
     Seq(sigT, vecT).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
@@ -990,6 +990,57 @@ class DedupSpec extends SparkSpec {
     Seq(bt, st).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
+  test("compactEmbedIndex collapses per-bucket file counts after appends " +
+       "to one write's worth; results bit-equal") {
+    def vec(seed: Int) = {
+      val rr = new scala.util.Random(seed)
+      Seq.fill(12)(rr.nextGaussian())
+    }
+    val tag = "embcompact_" + System.nanoTime()
+    val corpus = (1L to 30L).map(i => (i, vec(i.toInt))).toDF("vec_id", "embedding")
+    Dedup.writeEmbedIndex(corpus, "vec_id", "embedding", tag,
+      bits = 8, tables = 4)
+    // three daily appends of novel vectors → 4 writes' worth of files
+    var union = corpus
+    for (k <- 0 until 3) {
+      val day = Seq((100L + k, vec(100 + k))).toDF("vec_id", "embedding")
+      union = union.unionByName(Dedup.appendEmbedIndex(
+        day, "vec_id", "embedding", tag))
+    }
+    val (sigT, vecT) = Dedup.embedIndexTables(tag)
+    def files(t: String): Int = {
+      val loc = spark.sql(s"DESCRIBE EXTENDED $t").filter(col("col_name") === "Location")
+        .head().getString(1)
+      val p = new org.apache.hadoop.fs.Path(loc)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.listStatus(p).count(s => s.getPath.getName.endsWith(".parquet"))
+    }
+    // scaled copies of a base vector and of an appended one
+    val batch = Seq((203L, vec(3).map(_ * 1.5)), (301L, vec(101).map(_ * 2.0)))
+      .toDF("vec_id", "embedding")
+    def probe = Dedup.embedIncrementalPersisted(batch, "vec_id", "embedding",
+      tag, tau = 0.999).collect().map(_.toSeq).toSeq
+    val before = probe
+    val filesBefore = Seq(sigT, vecT).map(files)
+    Dedup.compactEmbedIndex(spark, tag)
+    val filesAfter = Seq(sigT, vecT).map(files)
+    // one write's worth: a fresh index over the same rows has as many files
+    val fresh = tag + "_fresh"
+    Dedup.writeEmbedIndex(union, "vec_id", "embedding", fresh,
+      bits = 8, tables = 4)
+    val (freshSig, freshVec) = Dedup.embedIndexTables(fresh)
+    assert(filesAfter == Seq(freshSig, freshVec).map(files),
+      s"compacted files $filesAfter != a fresh write's")
+    assert(filesAfter.zip(filesBefore).forall { case (a, b) => a < b },
+      s"compaction did not shrink files: $filesBefore -> $filesAfter")
+    val after = probe
+    assert(after == before, "compaction changed results")
+    assert(after.map(_.take(2)) == Seq(Seq(203L, 3L), Seq(301L, 101L)),
+      s"probe batch did not match its sources: $after")
+    Seq(sigT, vecT, freshSig, freshVec)
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  }
+
   test("removeFromMinhashIndex purges docs via anti-join rewrite: copies " +
        "of removed docs stop matching, survivors still match, fingerprint " +
        "subtracts (judge r14 ask #4)") {
@@ -1010,10 +1061,10 @@ class DedupSpec extends SparkSpec {
     // without a rebuild (a rebuild is observable: it would also purge
     // nothing new, so check the recorded fingerprint directly)
     val (bt, st) = Dedup.indexTables(tag)
-    val remainFp = Dedup.corpusFingerprint(
+    val remainFp = IndexStore.corpusFingerprint(
       corpus.filter(col("doc_id") =!= 3L), "doc_id", "text")
-    assert(Dedup.tableFingerprint(spark, bt).contains(remainFp))
-    assert(Dedup.tableFingerprint(spark, st).contains(remainFp))
+    assert(IndexStore.tableFingerprint(spark, bt).contains(remainFp))
+    assert(IndexStore.tableFingerprint(spark, st).contains(remainFp))
     Seq(bt, st).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
@@ -1042,10 +1093,10 @@ class DedupSpec extends SparkSpec {
     assert(hits == Set((104L, 4L)), s"vector delete did not land exactly: $hits")
     // subtractive fingerprint: the recorded value equals corpus \ removed
     val (sigT, vecT) = Dedup.embedIndexTables(tag)
-    val remainFp = Dedup.corpusFingerprint(
+    val remainFp = IndexStore.corpusFingerprint(
       corpus.filter(col("vec_id") =!= 3L), "vec_id", "embedding")
-    assert(Dedup.tableFingerprint(spark, sigT).contains(remainFp))
-    assert(Dedup.tableFingerprint(spark, vecT).contains(remainFp))
+    assert(IndexStore.tableFingerprint(spark, sigT).contains(remainFp))
+    assert(IndexStore.tableFingerprint(spark, vecT).contains(remainFp))
     // AS-INDEXED contract (advisor r15): a removal row that was never
     // indexed would silently corrupt the fingerprint — it fails fast
     val ex = intercept[IllegalArgumentException] {

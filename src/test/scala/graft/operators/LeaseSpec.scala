@@ -63,12 +63,12 @@ class LeaseSpec extends SparkSpec {
     assert(spark.table(st).count() == before - 1)
     // stale-lease takeover: a dead holder's residue (old stamp) breaks
     val stale = intercept[IllegalStateException] {
-      Dedup.withMaintenanceLease(spark, bt, "outer") {
-        Dedup.withMaintenanceLease(spark, bt, "inner")(()) // reentrant ok
+      IndexStore.withMaintenanceLease(spark, bt, "outer") {
+        IndexStore.withMaintenanceLease(spark, bt, "inner")(()) // reentrant ok
         // a DIFFERENT thread hits the held lease and fails
         var failed: Option[Throwable] = None
         val t = new Thread(() =>
-          try Dedup.withMaintenanceLease(spark, bt, "rival")(())
+          try IndexStore.withMaintenanceLease(spark, bt, "rival")(())
           catch { case x: Throwable => failed = Some(x) })
         t.start(); t.join(60000)
         throw failed.getOrElse(
@@ -80,6 +80,101 @@ class LeaseSpec extends SparkSpec {
     Seq(bt, st, obt, ost).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
+  /** Hold `keys`' leases in another thread until the returned release
+    * runs — a writer genuinely in flight on those tags. */
+  private def holdLeases(keys: Seq[String]): () => Unit = {
+    val entered = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    def hold(ks: Seq[String]): Unit = ks match {
+      case k +: rest => IndexStore.withMaintenanceLease(spark, k, "holder")(hold(rest))
+      case _ => entered.countDown(); release.await()
+    }
+    val t = new Thread(() => hold(keys))
+    t.start()
+    assert(entered.await(60, java.util.concurrent.TimeUnit.SECONDS),
+      "holder never took the lease")
+    () => { release.countDown(); t.join(60000) }
+  }
+
+  test("a maintained batch takes the lease BEFORE its commits probe: an " +
+      "already-committed batch fails fast while another writer holds it") {
+    import graft.streaming.EventStreams
+    val tag = "lease_probe_" + System.nanoTime()
+    val docs = (1L to 20L)
+      .map(i => (i, s"alpha beta gamma delta token$i tail$i end$i"))
+      .toDF("doc_id", "text")
+    Dedup.writeMinhashIndex(docs, "doc_id", "text", tag)
+    val (bt, st) = Dedup.indexTables(tag)
+    val batch = Seq((100L, "novel words for the maintained batch only"))
+      .toDF("doc_id", "text")
+    EventStreams.maintainedMinhashBatch(batch, 0L, "doc_id", "text", tag,
+      0.5, (_, _) => ())
+    val release = holdLeases(Seq(bt))
+    try {
+      // batch 0 is committed, but the probe that says so is a read that
+      // decides a write: it must wait for the lease like everything else
+      val e = intercept[IllegalStateException] {
+        EventStreams.maintainedMinhashBatch(batch, 0L, "doc_id", "text", tag,
+          0.5, (_, _) => ())
+      }
+      assert(e.getMessage.contains("maintenance lease"), e.getMessage)
+    } finally release()
+    // lease free again: the committed replay is a no-op
+    EventStreams.maintainedMinhashBatch(batch, 0L, "doc_id", "text", tag,
+      0.5, (_, _) => ())
+    assert(spark.table(st).count() == 21L)
+    Seq(bt, st, Dedup.commitsTableName(bt))
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  }
+
+  test("every maintenance entry of all three index families fails fast " +
+      "while another writer holds the tag's lease; the indexes stay intact") {
+    def vec(seed: Int) = {
+      val r = new scala.util.Random(seed)
+      Seq.fill(8)(r.nextGaussian())
+    }
+    val tag = "lease_all_" + System.nanoTime()
+    val docs = (1L to 20L)
+      .map(i => (i, s"alpha beta gamma delta token$i tail$i end$i"))
+      .toDF("doc_id", "text")
+    val vecs = (1L to 40L).map(i => (i, vec(i.toInt))).toDF("vec_id", "embedding")
+    Dedup.writeMinhashIndex(docs, "doc_id", "text", tag)
+    Dedup.writeEmbedIndex(vecs, "vec_id", "embedding", tag, bits = 8, tables = 4)
+    Similarity.writeAnnIndex(vecs, "vec_id", "embedding", tag, nlist = 4)
+    val (bt, st) = Dedup.indexTables(tag)
+    val (sigT, vecT) = Dedup.embedIndexTables(tag)
+    val (codesT, annVecsT, coarseT, pqT) = Similarity.annIndexTables(tag)
+    val tables = Seq(bt, st, sigT, vecT, codesT, annVecsT)
+    def counts = tables.map(spark.table(_).count())
+    val before = counts
+    val newDocs = Seq((100L, "novel words for the append")).toDF("doc_id", "text")
+    val newVecs = Seq((100L, vec(100))).toDF("vec_id", "embedding")
+    val entries: Seq[(String, () => Any)] = Seq(
+      "appendMinhashIndex" ->
+        (() => Dedup.appendMinhashIndex(newDocs, "doc_id", "text", tag)),
+      "removeFromMinhashIndex" -> (() => Dedup.removeFromMinhashIndex(
+        docs.filter(col("doc_id") === 1L), "doc_id", "text", tag)),
+      "compactMinhashIndex" -> (() => Dedup.compactMinhashIndex(spark, tag)),
+      "appendEmbedIndex" ->
+        (() => Dedup.appendEmbedIndex(newVecs, "vec_id", "embedding", tag)),
+      "removeFromEmbedIndex" -> (() => Dedup.removeFromEmbedIndex(
+        vecs.filter(col("vec_id") === 1L), "vec_id", "embedding", tag)),
+      "compactEmbedIndex" -> (() => Dedup.compactEmbedIndex(spark, tag)),
+      "appendAnnIndex" ->
+        (() => Similarity.appendAnnIndex(newVecs, "vec_id", "embedding", tag)),
+      "removeFromAnnIndex" -> (() => Similarity.removeFromAnnIndex(
+        vecs.filter(col("vec_id") === 1L), "vec_id", "embedding", tag)),
+      "compactAnnIndex" -> (() => Similarity.compactAnnIndex(spark, tag)))
+    val release = holdLeases(Seq(bt, sigT, codesT))
+    try entries.foreach { case (name, call) =>
+      val e = intercept[IllegalStateException](call())
+      assert(e.getMessage.contains(s"$name: maintenance lease"), e.getMessage)
+    } finally release()
+    assert(counts == before, "a refused maintenance call mutated an index")
+    (tables ++ Seq(coarseT, pqT, Similarity.annStatsTable(tag)))
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  }
+
   test("a crashed holder's stale lease is broken after the TTL") {
     val key = "lease_ttl_probe"
     // simulate a dead holder: lease file with an ancient stamp
@@ -89,7 +184,7 @@ class LeaseSpec extends SparkSpec {
     val out = fs.create(path, true)
     out.writeLong(System.currentTimeMillis() - 3600L * 1000); out.close()
     var ran = false
-    Dedup.withMaintenanceLease(spark, key, "probe") { ran = true }
+    IndexStore.withMaintenanceLease(spark, key, "probe") { ran = true }
     assert(ran, "stale lease was not broken")
     assert(!fs.exists(path), "lease not released after the body")
   }

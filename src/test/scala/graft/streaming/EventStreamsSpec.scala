@@ -1170,8 +1170,8 @@ class EventStreamsSpec extends SparkSpec {
       "double-append in the bands table")
     // fingerprint recovered exactly: base + batch-0 admissions
     val admitted0 = corpus.unionByName(Seq((100L, doc(99))).toDF("doc_id", "text"))
-    assert(Dedup.tableFingerprint(spark, bt)
-      .contains(Dedup.corpusFingerprint(admitted0, "doc_id", "text")),
+    assert(graft.operators.IndexStore.tableFingerprint(spark, bt)
+      .contains(graft.operators.IndexStore.corpusFingerprint(admitted0, "doc_id", "text")),
       "crash recovery drifted the fingerprint")
     // batch 1: a copy of the admitted doc matches it exactly once —
     // provable only if the index holds exactly one copy of doc 100
@@ -1280,10 +1280,10 @@ class EventStreamsSpec extends SparkSpec {
       "double-append in the ANN index tables")
     // the purge restored the committed fingerprint EXACTLY: after the
     // replay's append, all four tables verify over corpus ∪ batch 0
-    val fp = Dedup.corpusFingerprint(
+    val fp = graft.operators.IndexStore.corpusFingerprint(
       corpus.unionByName(b0), "vec_id", "embedding")
     assert(Seq(codesT, vecsT, coarseT, pqT).forall(t =>
-      Dedup.tableFingerprint(spark, t).contains(fp)),
+      graft.operators.IndexStore.tableFingerprint(spark, t).contains(fp)),
       "fingerprint did not heal to corpus ∪ committed batches")
     // batch 1: a 2.0x copy of the batch-0 NOVEL vector serves to it —
     // provable only via the appended index rows
