@@ -1,5 +1,6 @@
 package graft.api
 
+import graft.functions.GraftFunctions.exact_percentile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DataType
@@ -311,7 +312,6 @@ final case class Table(df: DataFrame, name: String) {
     * what dominates. */
   def describe(cols: Seq[String], approx: Boolean = false): DataFrame = {
     require(cols.nonEmpty, "describe needs at least one column")
-    graft.functions.GraftFunctions.ensureRegistered(df.sparkSession)
     val D = org.apache.spark.sql.types.DataTypes.createDecimalType(28, 6)
     val aggs = cols.flatMap { c =>
       Seq(count(col(c)).as(s"__cnt_$c"),
@@ -326,10 +326,10 @@ final case class Table(df: DataFrame, name: String) {
     // final-merge task — the r9 scale-killer). Values carry the
     // ±n/accuracy rank guarantee (checked by q_describe_approx's oracle).
     val qAggs = cols.map { c =>
-      val e =
-        if (approx) s"approx_percentile($c, array(0.25D, 0.5D, 0.75D), 10000)"
-        else s"exact_percentile($c, array(0.25, 0.5, 0.75))"
-      expr(e).cast("array<double>").as(s"__q_$c")
+      val q =
+        if (approx) expr(s"approx_percentile($c, array(0.25D, 0.5D, 0.75D), 10000)")
+        else exact_percentile(col(c), 0.25, 0.5, 0.75)
+      q.cast("array<double>").as(s"__q_$c")
     }
     val moments = df.agg(count(lit(1)).as("__nr"), aggs: _*)
     val quarts = df.agg(qAggs.head, qAggs.tail: _*)

@@ -1,18 +1,25 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
+import org.apache.spark.sql.graft.Columns.{expr, of}
+import org.apache.spark.sql.types.DoubleType
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.functions.call_function
 
-/** Registration of graft's native expressions.
+import scala.collection.immutable.ArraySeq
+
+/** graft's native expressions, reachable two ways.
   *
-  * Two routes, both public Spark API:
-  *   - `SparkSession.builder().withExtensions(GraftExtensions.inject)` (or
-  *     `spark.sql.extensions=graft.functions.GraftExtensions`) — the
-  *     cluster-deployment route;
-  *   - `GraftFunctions.ensureRegistered(spark)` — imperative fallback for
-  *     sessions graft didn't build (driver smoke, notebooks).
+  *   - Column API: the handles on [[GraftFunctions]] build their Catalyst
+  *     expression directly, so they plan on any session, registered or
+  *     not. Every graft operator and query uses this route.
+  *   - SQL strings (`spark.sql`, `expr`, `selectExpr`) resolve functions
+  *     by name, so the session's registry must hold them: build it with
+  *     `SparkSession.builder().withExtensions(GraftExtensions.inject)` (or
+  *     `spark.sql.extensions=graft.functions.GraftExtensions`), or call
+  *     `GraftFunctions.ensureRegistered(spark)` on a session graft didn't
+  *     build. `Tables.load` does the latter, so raw SQL over
+  *     `Tables.registerViews` resolves graft functions too.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = GraftExtensions.inject(e)
@@ -141,8 +148,7 @@ object GraftExtensions {
         info(classOf[ExactPercentile], "exact_percentile"),
         (es: Seq[Expression]) => {
           val (ps, isArray) = ExactPercentile.percentagesFromLiteral(es(1))
-          ExactPercentile(org.apache.spark.sql.catalyst.expressions.Cast(
-            es.head, org.apache.spark.sql.types.DoubleType), ps, isArray)
+          ExactPercentile(Cast(es.head, DoubleType), ps, isArray)
         })
     )
 
@@ -151,7 +157,8 @@ object GraftExtensions {
 }
 
 object GraftFunctions {
-  /** Register on an existing session (idempotent). */
+  /** Register on an existing session (idempotent) — the SQL-string route;
+    * the Column handles below need no registration. */
   def ensureRegistered(spark: SparkSession): Unit = {
     val reg = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry
@@ -160,82 +167,62 @@ object GraftFunctions {
     }
   }
 
-  // Column-API handles (functions must be registered on the active session).
-  def rolling_hash(c: Column): Column = call_function("rolling_hash", c)
-  def simhash64(c: Column): Column = call_function("simhash64", c)
-  def simhash_wide(c: Column, parts: Int): Column =
-    call_function("simhash_wide", c, org.apache.spark.sql.functions.lit(parts))
-  def vec_dot(a: Column, b: Column): Column = call_function("vec_dot", a, b)
-  def ham_xor(a: Column, b: Column): Column = call_function("ham_xor", a, b)
+  def rolling_hash(c: Column): Column = of(RollingHash(expr(c)))
+  def simhash64(c: Column): Column = of(SimHash64(expr(c)))
+  def simhash_wide(c: Column, parts: Int): Column = of(SimHashWide(expr(c), parts))
+  def vec_dot(a: Column, b: Column): Column = of(VecDot(expr(a), expr(b)))
+  def ham_xor(a: Column, b: Column): Column = of(HamXor(expr(a), expr(b)))
   def srp_sketch(v: Column, words: Int, planesPerWord: Int,
                  seedBase: Long): Column =
-    call_function("srp_sketch", v, org.apache.spark.sql.functions.lit(words),
-      org.apache.spark.sql.functions.lit(planesPerWord),
-      org.apache.spark.sql.functions.lit(seedBase))
+    of(SrpSketch(expr(v), words, planesPerWord, seedBase))
   def minhash_bands(shingles: Column, numPerm: Int, bands: Int): Column =
-    call_function("minhash_bands", shingles,
-      org.apache.spark.sql.functions.lit(numPerm),
-      org.apache.spark.sql.functions.lit(bands))
-  def word_shingles(text: Column, w: Int): Column =
-    call_function("word_shingles", text, org.apache.spark.sql.functions.lit(w))
-  def word_ngrams(text: Column, n: Int): Column =
-    call_function("word_ngrams", text, org.apache.spark.sql.functions.lit(n))
-  def fnv1a64(s: Column, basis: Long): Column =
-    call_function("fnv1a64", s, org.apache.spark.sql.functions.lit(basis))
+    of(MinHashBands(expr(shingles), numPerm, bands))
+  def word_shingles(text: Column, w: Int): Column = of(WordShingles(expr(text), w))
+  def word_ngrams(text: Column, n: Int): Column = of(WordNgrams(expr(text), n))
+  def fnv1a64(s: Column, basis: Long): Column = of(Fnv1a64Col(expr(s), basis))
   def nb_scores(toks: Column, vocab: Seq[String], lam: Seq[Seq[Long]],
                 oov: Seq[Long], prior: Seq[Long]): Column =
-    call_function("nb_scores", toks,
-      org.apache.spark.sql.functions.typedLit(vocab),
-      org.apache.spark.sql.functions.typedLit(lam),
-      org.apache.spark.sql.functions.typedLit(oov),
-      org.apache.spark.sql.functions.typedLit(prior))
+    of(NbScores(expr(toks), vocab.toArray, lam.map(_.toArray).toArray,
+      oov.toArray, prior.toArray))
   def dsir_score(feats: Column, lamMicros: Seq[Long]): Column =
-    call_function("dsir_score", feats,
-      org.apache.spark.sql.functions.typedLit(lamMicros))
+    of(DsirScore(expr(feats), lamMicros.toArray))
   def word_chunks(text: Column, size: Int, stride: Int): Column =
-    call_function("word_chunks", text,
-      org.apache.spark.sql.functions.lit(size),
-      org.apache.spark.sql.functions.lit(stride))
-  def nfc_normalize(text: Column): Column = call_function("nfc_normalize", text)
-  def char_pairs(text: Column): Column = call_function("char_pairs", text)
+    of(WordChunks(expr(text), size, stride))
+  def nfc_normalize(text: Column): Column = of(NfcNormalize(expr(text)))
+  def char_pairs(text: Column): Column = of(CharPairs(expr(text)))
   def bloom_contains(words: Column, key: Column, k: Int): Column =
-    call_function("bloom_contains", words, key,
-      org.apache.spark.sql.functions.lit(k))
-  def media_header(payload: Column): Column = call_function("media_header", payload)
-  def html_text(html: Column): Column = call_function("html_text", html)
-  def audio_header(payload: Column): Column = call_function("audio_header", payload)
-  def mp4_header(payload: Column): Column = call_function("mp4_header", payload)
+    of(BloomContains(expr(words), expr(key), k))
+  def media_header(payload: Column): Column = of(MediaHeader(expr(payload)))
+  def html_text(html: Column): Column = of(HtmlText(expr(html)))
+  def audio_header(payload: Column): Column = of(AudioHeader(expr(payload)))
+  def mp4_header(payload: Column): Column = of(Mp4Header(expr(payload)))
   def image_dhash(payload: Column, gcols: Int, grows: Int): Column =
-    call_function("image_dhash", payload,
-      org.apache.spark.sql.functions.lit(gcols),
-      org.apache.spark.sql.functions.lit(grows))
+    of(ImageDhash(expr(payload), gcols, grows))
   def bmp_synth(src: Column, shift: Column, bump: Column): Column =
-    call_function("bmp_synth", src, shift, bump)
+    of(BmpSynth(expr(src), expr(shift), expr(bump)))
   def pcm_fingerprint(payload: Column, wins: Int, phases: Int): Column =
-    call_function("pcm_fingerprint", payload,
-      org.apache.spark.sql.functions.lit(wins),
-      org.apache.spark.sql.functions.lit(phases))
+    of(PcmFingerprint(expr(payload), wins, phases))
   def wav_synth(src: Column, gain: Column, bump: Column): Column =
-    call_function("wav_synth", src, gain, bump)
+    of(WavSynth(expr(src), expr(gain), expr(bump)))
   def video_dhash(payload: Column, frames: Int, gcols: Int, grows: Int): Column =
-    call_function("video_dhash", payload,
-      org.apache.spark.sql.functions.lit(frames),
-      org.apache.spark.sql.functions.lit(gcols),
-      org.apache.spark.sql.functions.lit(grows))
+    of(VideoDhash(expr(payload), frames, gcols, grows))
+  // ArraySeq vocabularies, as the registered function decodes them, so a
+  // plan prints the same text whichever route built it
   def marker_counts(toks: Column, vocabs: Seq[Seq[String]]): Column =
-    call_function("marker_counts", toks,
-      org.apache.spark.sql.functions.typedLit(vocabs))
+    of(MarkerCounts(expr(toks), vocabs.map(ArraySeq.from(_))))
   def vec_mat_cosines(v: Column, mat: Array[Array[Double]]): Column =
-    call_function("vec_mat_cosines", v,
-      org.apache.spark.sql.functions.typedLit(mat.map(_.toSeq).toSeq))
-  def repetition_stats(toks: Column): Column = call_function("repetition_stats", toks)
-  def text_quality_stats(text: Column): Column =
-    call_function("text_quality_stats", text)
+    of(VecMatCosines(expr(v), mat))
+  def repetition_stats(toks: Column): Column = of(RepetitionStats(expr(toks)))
+  def text_quality_stats(text: Column): Column = of(QualityStats(expr(text)))
   def byte_histogram(payload: Column, buckets: Int): Column =
-    call_function("byte_histogram", payload,
-      org.apache.spark.sql.functions.lit(buckets))
+    of(ByteHistogram(expr(payload), buckets))
   def srp_signature(v: Column, numPlanes: Int, seed: Long = 0L): Column =
-    call_function("srp_signature", v,
-      org.apache.spark.sql.functions.lit(numPlanes),
-      org.apache.spark.sql.functions.lit(seed))
+    of(SrpSignature(expr(v), numPlanes, seed))
+  def dec6_micros(v: Column): Column = of(Dec6Micros(expr(v)))
+  /** Exact quantile aggregate (see [[ExactPercentile]]): one percentage
+    * returns DOUBLE, several return ARRAY<DOUBLE> in the given order. The
+    * input is cast to DOUBLE, as the registered function does. */
+  def exact_percentile(c: Column, ps: Double*): Column =
+    of(ExactPercentile(Cast(expr(c), DoubleType), ps.toArray, ps.length > 1)
+      .toAggregateExpression())
 }

@@ -95,7 +95,6 @@ object Dedup {
   def minhashPairs(docs: DataFrame, idCol: String, textCol: String,
                    tau: Double, numPerm: Int = 128, bands: Int = 32,
                    maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    GraftFunctions.ensureRegistered(docs.sparkSession)
     val sh = docs.select(col(idCol).as("doc_id"),
       GraftFunctions.word_shingles(col(textCol), 3).as("sh"))
     val bandsDf = sh.select(col("doc_id"),
@@ -192,7 +191,6 @@ object Dedup {
                          idCol: String, textCol: String, tau: Double,
                          numPerm: Int = 128, bands: Int = 32,
                          maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    GraftFunctions.ensureRegistered(batch.sparkSession)
     def shingled(df: DataFrame) = df.select(col(idCol).as("doc_id"),
       GraftFunctions.word_shingles(col(textCol), 3).as("sh"))
     def banded(sh: DataFrame) = sh.select(col("doc_id"),
@@ -305,7 +303,6 @@ object Dedup {
                         tag: String, numPerm: Int = 128, bands: Int = 32,
                         maxBucket: Int = DefaultMaxBucket,
                         buckets: Int = 32): Unit = {
-    GraftFunctions.ensureRegistered(corpus.sparkSession)
     val ix = IndexStore.replace(corpus.sparkSession, MinhashLayout, tag)
     // the shingle table ALSO carries the doc's full band-signature array
     // (judge r13 ask #8): the streaming twin's first-colliding-band
@@ -455,7 +452,6 @@ object Dedup {
   def appendMinhashIndex(admitted: DataFrame, idCol: String,
                          textCol: String, tag: String): DataFrame = {
     val spark = admitted.sparkSession
-    GraftFunctions.ensureRegistered(spark)
     IndexStore.open(spark, MinhashLayout, tag, "appendMinhashIndex")(
       appendMinhash(_, admitted, idCol, textCol))
   }
@@ -485,7 +481,6 @@ object Dedup {
                                   textCol: String, tag: String,
                                   tau: Double): DataFrame = {
     val spark = batch.sparkSession
-    GraftFunctions.ensureRegistered(spark)
     // geometry FROM the recorded table properties (advisor r14): a
     // caller-supplied numPerm/bands that disagreed with the stored
     // layout would silently yield near-empty candidate sets
@@ -590,7 +585,6 @@ object Dedup {
                    maxHamming: Int,
                    chunks: Int = 0, chunkBits: Int = 0,
                    maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    GraftFunctions.ensureRegistered(docs.sparkSession)
     val nChunks =
       if (chunks > 0) chunks
       else Seq(2, 4, 8, 16, 32, 64).find(_ > maxHamming).getOrElse(
@@ -672,7 +666,6 @@ object Dedup {
   def imageDhashPairs(imgs: DataFrame, idCol: String, payloadCol: String,
                       maxHamming: Int, gcols: Int = 17, grows: Int = 8,
                       maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    GraftFunctions.ensureRegistered(imgs.sparkSession)
     val nbits = (gcols - 1) * grows
     require(nbits % 64 == 0,
       s"dhash grid must pack whole 64-bit words, got $nbits bits")
@@ -721,7 +714,6 @@ object Dedup {
   def pcmFingerprintPairs(auds: DataFrame, idCol: String, payloadCol: String,
                           maxHamming: Int, wins: Int = 17, phases: Int = 8,
                           maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    GraftFunctions.ensureRegistered(auds.sparkSession)
     val nbits = (wins - 1) * phases
     require(nbits % 64 == 0,
       s"fingerprint grid must pack whole 64-bit words, got $nbits bits")
@@ -771,7 +763,6 @@ object Dedup {
                       maxHamming: Int, frames: Int = 4,
                       gcols: Int = 17, grows: Int = 8,
                       maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    GraftFunctions.ensureRegistered(vids.sparkSession)
     val nbits = frames * (gcols - 1) * grows
     require(nbits % 64 == 0,
       s"fingerprint must pack whole 64-bit words, got $nbits bits")
@@ -830,7 +821,6 @@ object Dedup {
   def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
                         w: Int, tau: Double,
                         prefixFilter: Boolean = true): DataFrame = {
-    GraftFunctions.ensureRegistered(docs.sparkSession)
     val sh = docs.select(col(idCol).as("doc_id"),
       GraftFunctions.word_shingles(col(textCol), w).as("sh"))
     val inv = sh.select(col("doc_id"), size(col("sh")).as("n"),
@@ -880,7 +870,6 @@ object Dedup {
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
                        w: Int, tau: Double,
                        maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    GraftFunctions.ensureRegistered(docs.sparkSession)
     val sh = docs.select(col(idCol).as("doc_id"),
       GraftFunctions.word_shingles(col(textCol), w).as("sh"))
     val inv = sh.select(col("doc_id"), explode(col("sh")).as("s"))
@@ -939,7 +928,6 @@ object Dedup {
                       maxDf: Int = 16): DataFrame = {
     require(w > 0 && minShared > 0 && maxDf >= 2,
       s"w/minShared must be positive and maxDf >= 2, got ($w, $minShared, $maxDf)")
-    GraftFunctions.ensureRegistered(docs.sparkSession)
     val inv = docs.select(col(idCol).as("doc_id"),
       explode(GraftFunctions.word_shingles(col(textCol), w)).as("s"))
       .select(col("doc_id"), col("s"), xxhash64(col("s")).as("h"))
@@ -1382,7 +1370,6 @@ object Dedup {
     * Cosine uses Similarity.cosine (deterministic left-fold dot product). */
   def embedPairs(emb: DataFrame, idCol: String, vecCol: String,
                  tau: Double, maxRows: Long = MaxExactEmbedRows): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(emb.sparkSession)
     val n = emb.select(idCol).count()
     require(n <= maxRows,
       s"embedPairs is the exact all-pairs baseline (O(n^2) cartesian) and is " +
@@ -1491,7 +1478,6 @@ object Dedup {
   def embedPairsBanded(emb: DataFrame, idCol: String, vecCol: String,
                        tau: Double, bits: Int = 0, tables: Int = 32,
                        maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    GraftFunctions.ensureRegistered(emb.sparkSession)
     val e = emb.select(col(idCol).as("vid"),
       col(vecCol).cast("array<double>").as("v"))
       .withColumn("nrm", sqrt(Similarity.dot(col("v"), col("v"))))
@@ -1577,7 +1563,6 @@ object Dedup {
                        idCol: String, vecCol: String, tau: Double,
                        bits: Int = 0, tables: Int = 32,
                        maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    GraftFunctions.ensureRegistered(batch.sparkSession)
     def prep(df: DataFrame) = df.select(col(idCol).as("vid"),
       col(vecCol).cast("array<double>").as("v"))
       .withColumn("nrm", sqrt(Similarity.dot(col("v"), col("v"))))
@@ -1679,7 +1664,6 @@ object Dedup {
                       buckets: Int = 32): Unit = {
     require(bits >= 1 && bits <= 62, s"bits must be in [1, 62], got $bits")
     val spark = corpus.sparkSession
-    GraftFunctions.ensureRegistered(spark)
     val ix = IndexStore.replace(spark, EmbedLayout, tag)
     val (e, releaseE) = spreadBounded(
       embedRows(corpus, idCol, vecCol, bits, tables), col("corpus_id"))
@@ -1725,7 +1709,6 @@ object Dedup {
                                 vecCol: String, tag: String,
                                 tau: Double): DataFrame = {
     val spark = batch.sparkSession
-    GraftFunctions.ensureRegistered(spark)
     val ix = IndexStore.read(spark, EmbedLayout, tag, "embedIncrementalPersisted")
     val (sigT, vecT) = embedIndexTables(tag)
     val bits = ix.int(EmbedBitsProp)
@@ -1771,7 +1754,6 @@ object Dedup {
   def appendEmbedIndex(admitted: DataFrame, idCol: String,
                        vecCol: String, tag: String): DataFrame = {
     val spark = admitted.sparkSession
-    GraftFunctions.ensureRegistered(spark)
     IndexStore.open(spark, EmbedLayout, tag, "appendEmbedIndex")(
       appendEmbed(_, admitted, idCol, vecCol))
   }
@@ -1821,7 +1803,6 @@ object Dedup {
                seed: Long = 42L): DataFrame = {
     require(nlist >= 0 && kmeansIters >= 0,
       s"need nlist >= 0 and kmeansIters >= 0, got ($nlist, $kmeansIters)")
-    GraftFunctions.ensureRegistered(emb.sparkSession)
     val e = emb.select(col(idCol).as("vid"),
       col(vecCol).cast("array<double>").as("v"))
       .withColumn("nrm", sqrt(Similarity.dot(col("v"), col("v"))))
@@ -1890,7 +1871,6 @@ object Dedup {
   def cutDuplicateSpans(docs: DataFrame, idCol: String, textCol: String,
                         w: Int = 6): DataFrame = {
     require(w > 0, s"w must be positive, got $w")
-    GraftFunctions.ensureRegistered(docs.sparkSession)
     val base = docs.select(col(idCol).as("doc_id"),
       coalesce(col(textCol), lit("")).as("text"))
     val spans = base.select(col("doc_id"),
@@ -1930,7 +1910,6 @@ object Dedup {
   def duplicateSpanRuns(docs: DataFrame, idCol: String, textCol: String,
                         w: Int = 6): DataFrame = {
     require(w > 0, s"w must be positive, got $w")
-    GraftFunctions.ensureRegistered(docs.sparkSession)
     val base = docs.select(col(idCol).as("doc_id"),
       coalesce(col(textCol), lit("")).as("text"))
     val spans = base.select(col("doc_id"),

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.GraftFunctions.exact_percentile
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -107,15 +108,14 @@ object LanguageModel {
                         langCol: String, minCount: Long = 2,
                         oovAlpha: Double = 0.5, maxLangs: Int = 1000)
       : (DataFrame, () => Unit) = {
-    graft.functions.GraftFunctions.ensureRegistered(docs.sparkSession)
     val (ppl, cleanup) =
       perplexityManaged(docs, idCol, textCol, minCount, oovAlpha)
     val scores = ppl
       .join(docs.select(col(idCol).as("doc_id"), col(langCol).as("lang")),
         Seq("doc_id"))
     val thrRows = scores.groupBy("lang")
-      .agg(expr("exact_percentile(avg_nll, 0.3333333333333333)").as("t33"),
-        expr("exact_percentile(avg_nll, 0.6666666666666666)").as("t67"))
+      .agg(exact_percentile(col("avg_nll"), 0.3333333333333333).as("t33"),
+        exact_percentile(col("avg_nll"), 0.6666666666666666).as("t67"))
       .limit(maxLangs + 1).collect()
     require(thrRows.length <= maxLangs,
       s"more than $maxLangs languages — not a bounded threshold table")
@@ -292,8 +292,8 @@ object LanguageModel {
     // VOCABULARY-bounded (advisor r17: n11 outgrows maxBroadcast long
     // before the vocab does, and losing their broadcasts turns two
     // scoring joins into corpus shuffles at mid scale) — when the free
-    // n11 bound fails, ONE exact count over the persisted b2 recovers
-    // the vocab-sized truth for both.
+    // n11 bound fails, two exact counts over the persisted b2 (one job
+    // each: vRel's and contW's) recover the vocab-sized truth.
     val t3Count = t3.count()
     val vRelBound =
       if (n11.toLong <= maxBroadcast) n11.toLong else vRel.count()

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** First-principal-component PCA over an embedding column — the
@@ -14,10 +14,10 @@ import org.apache.spark.sql.functions._
   * pass — per-dimension sums and the (j,k) cross-product sums, both
   * partial-agg groupBys over a scan-side double-explode fan-out (dim²
   * terms per row computed in the task, dim² ROWS shuffled total, never
-  * per-pair joins). The covariance matrix is a dim²-bounded relation,
+  * per-pair joins). Those statistics are a dim²-bounded relation,
   * COLLECTED to the driver (the kmeansCodebook/centroidSnapshot
-  * bounded-matrix precedent); the 12 power-iteration rounds then run
-  * driver-resident on that matrix (r18, guide §5 job count — the r17
+  * bounded-matrix precedent); the covariance and the 12 power-iteration
+  * rounds then run driver-resident (r18, guide §5 job count — the r17
   * shape localCheckpointed a 64-row relation per round, paying ~15
   * driver-floor jobs for arithmetic over a few KB).
   *
@@ -39,21 +39,18 @@ object Pca {
   /** PC1 loadings + explained-variance share. Output: one row per
     * dimension (pos, loading 6dp, ev_share 6dp). `iters` power-iteration
     * rounds (12 separates eigenvalues ~1% apart; the spec checks
-    * against a dense driver reference). */
-  def pc1(embeds: DataFrame, vecCol: String, iters: Int = 12): DataFrame =
-    pc1Managed(embeds, vecCol, iters)._1
-
-  /** [[pc1]] plus a cleanup handle, kept for API stability (the r17
-    * shape checkpointed two relations; the driver-resident iteration
-    * holds no executor blocks, so cleanup is a no-op). */
-  def pc1Managed(embeds: DataFrame, vecCol: String,
-                 iters: Int = 12): (DataFrame, () => Unit) = {
+    * against a dense driver reference). Needs at least two rows of one
+    * vector length; an empty column, a single row or ragged lengths are
+    * rejected with an IllegalArgumentException naming the column. */
+  def pc1(embeds: DataFrame, vecCol: String, iters: Int = 12): DataFrame = {
     require(iters >= 1 && iters <= 64, s"iters must be in [1,64], got $iters")
     val spark = embeds.sparkSession
     import spark.implicits._
     val D = org.apache.spark.sql.types.DataTypes.createDecimalType(28, 6)
-    // one slim head() for the v0 literal (Similarity codebook precedent)
-    val dim = embeds.select(size(col(vecCol))).head().getInt(0)
+    // one slim head row for the v0 literal (Similarity codebook precedent)
+    val first = embeds.select(size(col(vecCol))).head(1)
+    require(first.nonEmpty, s"Pca.pc1: column '$vecCol' has no rows")
+    val dim = first.head.getInt(0)
     val v0 = 1.0 / math.sqrt(dim.toDouble)
 
     // sufficient statistics: S_j and SS_jk from one scan (two Generates,
@@ -69,18 +66,28 @@ object Pca {
     val sums = x.filter(col("k") === 0).groupBy("j")
       .agg(sum(col("xj").cast(D)).cast("double").as("s"),
         count(lit(1)).as("n"))
-    val cov = x.groupBy("j", "k")
+    val stats = x.groupBy("j", "k")
       .agg(sum((col("xj") * col("xk")).cast(D)).cast("double").as("ss"))
       .join(broadcast(sums.select(col("j"), col("s").as("sj"), col("n"))), "j")
       .join(broadcast(sums.select(col("j").as("k"), col("s").as("sk"))), "k")
-      .select(col("j"), col("k"),
-        ((col("ss") - col("sj") * col("sk") / col("n")) /
-          (col("n") - lit(1))).as("c"))
+      .select(col("j"), col("k"), col("ss"), col("sj"), col("sk"), col("n"))
 
-    // the dim²-bounded covariance comes to the driver; the iteration
-    // runs here with Spark-exact op semantics (see class doc)
+    // the dim²-bounded sufficient statistics come to the driver; the
+    // covariance and the iteration run here with Spark-exact op semantics
+    // (see class doc). A vector of another length than the first shows as
+    // a position outside [0, dim) or as an uneven per-position count.
+    val rows = stats.collect()
+    require(rows.forall(r => r.getInt(0) < dim && r.getInt(1) < dim) &&
+      rows.map(_.getLong(5)).distinct.length == 1,
+      s"Pca.pc1: column '$vecCol' holds vectors of different lengths")
+    val n = rows.head.getLong(5)
+    require(n > 1, s"Pca.pc1: column '$vecCol' needs at least 2 rows, got $n")
+    // C_jk = (SS_jk - S_j·S_k/n) / (n-1), the IEEE op order of the
+    // Spark spelling (bigint n widened to double at each division)
     val C = Array.ofDim[Double](dim, dim)
-    cov.collect().foreach(r => C(r.getInt(0))(r.getInt(1)) = r.getDouble(2))
+    rows.foreach(r => C(r.getInt(0))(r.getInt(1)) =
+      (r.getDouble(2) - r.getDouble(3) * r.getDouble(4) / n.toDouble) /
+        (n - 1).toDouble)
     def q6(v: Double): java.math.BigDecimal =
       java.math.BigDecimal.valueOf(v)
         .setScale(6, java.math.RoundingMode.HALF_UP)
@@ -101,10 +108,9 @@ object Pca {
     }
     // eigenvalue = ||C·v|| at the fixpoint (v is unit)
     val lam = norm(multiply(v))
-    val out = v.zipWithIndex.map { case (vj, j) => (j, vj) }.toSeq
+    v.zipWithIndex.map { case (vj, j) => (j, vj) }.toSeq
       .toDF("pos", "__v")
       .select(col("pos"), round(col("__v"), 6).as("loading"),
         round(lit(lam / tr), 6).as("ev_share"))
-    (out, () => ())
   }
 }

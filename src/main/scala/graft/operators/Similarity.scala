@@ -32,7 +32,6 @@ object Similarity {
     * query id — k·|queries| rows survive. Self-matches excluded. */
   def annTopK(emb: DataFrame, idCol: String, vecCol: String,
               queryIds: Seq[Long], k: Int): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(emb.sparkSession)
     val e = emb.select(col(idCol).as("vid"), col(vecCol).cast("array<double>").as("v"))
       .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
     val q = e.filter(col("vid").isin(queryIds: _*))
@@ -75,7 +74,6 @@ object Similarity {
     require(e.columns.contains("vid") && e.columns.contains("v"),
       s"kmeansCodebook expects columns (vid, v: array<double>), got " +
       e.columns.mkString("(", ", ", ")"))
-    graft.functions.GraftFunctions.ensureRegistered(e.sparkSession)
     // seeded-sample init ordered by md5("<vid>:<seed>") — a keyed hash
     // order like the previous xxhash64 form, but replayable by the
     // DuckDB oracle (md5 exists in both engines; xxhash64 does not), so
@@ -124,7 +122,6 @@ object Similarity {
              queryIds: Seq[Long], k: Int,
              nlist: Int = 16, nprobe: Int = 4,
              kmeansIters: Int = 2, seed: Long = 42L): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(emb.sparkSession)
     val e = emb.select(col(idCol).as("vid"), col(vecCol).cast("array<double>").as("v"))
       .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
     val codebook: Array[Array[Double]] = kmeansCodebook(e, nlist, kmeansIters, seed)
@@ -235,7 +232,6 @@ object Similarity {
             queryIds: Seq[Long], k: Int,
             m: Int = 4, ksub: Int = 8, kmeansIters: Int = 2,
             overfetch: Int = 4, seed: Long = 42L): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(emb.sparkSession)
     val spark = emb.sparkSession
     import spark.implicits._
     val e = emb.select(col(idCol).as("vid"), col(vecCol).cast("array<double>").as("v"))
@@ -400,7 +396,6 @@ object Similarity {
                nlist: Int = 16, nprobe: Int = 4,
                m: Int = 4, ksub: Int = 8, kmeansIters: Int = 2,
                overfetch: Int = 4, seed: Long = 42L): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(emb.sparkSession)
     val spark = emb.sparkSession
     import spark.implicits._
     val e = emb.select(col(idCol).as("vid"), col(vecCol).cast("array<double>").as("v"))
@@ -513,7 +508,6 @@ object Similarity {
                        nlist: Int = 16, nprobe: Int = 4,
                        m: Int = 4, ksub: Int = 8, kmeansIters: Int = 2,
                        overfetch: Int = 4, seed: Long = 42L): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(emb.sparkSession)
     val spark = emb.sparkSession
     import spark.implicits._
     val e = emb.select(col(idCol).as("vid"), col(vecCol).cast("array<double>").as("v"))
@@ -725,7 +719,6 @@ object Similarity {
                     tag: String, nlist: Int = 16, m: Int = 4,
                     ksub: Int = 8, kmeansIters: Int = 2,
                     seed: Long = 42L, buckets: Int = 32): Unit = {
-    graft.functions.GraftFunctions.ensureRegistered(emb.sparkSession)
     val spark = emb.sparkSession
     import spark.implicits._
     val ix = IndexStore.replace(spark, AnnLayout, tag)
@@ -807,7 +800,6 @@ object Similarity {
                      preloaded: Option[(Array[Array[Double]],
                        Array[Array[Array[Double]]])] = None): DataFrame = {
     val spark = newVecs.sparkSession
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     IndexStore.open(spark, AnnLayout, tag, "appendAnnIndex")(
       appendAnn(_, newVecs, idCol, vecCol, preloaded))
   }
@@ -882,7 +874,6 @@ object Similarity {
     * — visible, not hidden), and compaction leaves it unchanged. */
   def annDriftReport(spark: org.apache.spark.sql.SparkSession,
                      tag: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     IndexStore.open(spark, AnnLayout, tag, "annDriftReport") { ix =>
       val Seq(codesT, vecsT, coarseT, _) = ix.tables
       val statsT = annStatsTable(tag)
@@ -948,7 +939,6 @@ object Similarity {
   def annIvfPqPersisted(spark: org.apache.spark.sql.SparkSession,
                         tag: String, queryIds: Seq[Long], k: Int,
                         nprobe: Int = 4, overfetch: Int = 4): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     val ix = IndexStore.read(spark, AnnLayout, tag, "annIvfPqPersisted")
     servePersisted(ix, loadCodebooks(ix),
       spark.table(ix.table("_vecs")).filter(col("vid").isin(queryIds: _*)),
@@ -983,7 +973,6 @@ object Similarity {
                     preloaded: Option[(Array[Array[Double]],
                       Array[Array[Array[Double]]])] = None): DataFrame = {
     val spark = queries.sparkSession
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     // a multi-column relation passed by mistake would otherwise be
     // silently narrowed to its first column — serving against the wrong
     // id set with no error (advisor r16)
@@ -1130,7 +1119,6 @@ object Similarity {
 
   def nearestCentroid(emb: DataFrame, idCol: String, vecCol: String,
                       labelCol: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(emb.sparkSession)
     // long-format (label, pos, c) rows, label-then-pos ordered, fold into
     // the label-major matrix; decimal-exact means, so the collected
     // centroids are bit-identical to what the oracle's CTE computes
@@ -1163,7 +1151,6 @@ object Similarity {
   def knnClassify(emb: DataFrame, idCol: String, vecCol: String,
                   labelCol: String, probe: Column, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    graft.functions.GraftFunctions.ensureRegistered(emb.sparkSession)
     val e = emb.select(col(idCol).as("vid"),
       col(vecCol).cast("array<double>").as("v"), col(labelCol).as("lbl"))
       .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
@@ -1205,7 +1192,6 @@ object Similarity {
   def annLsh(emb: DataFrame, idCol: String, vecCol: String,
              queryIds: Seq[Long], k: Int,
              numPlanes: Int = 16, bands: Int = 4): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(emb.sparkSession)
     val bits = numPlanes / bands
     val mask = (1L << bits) - 1
     val e = emb.select(col(idCol).as("vid"), col(vecCol).cast("array<double>").as("v"),

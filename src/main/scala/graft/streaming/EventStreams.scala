@@ -146,7 +146,6 @@ object EventStreams {
     * report why survivors nearly died. */
   def gopherStream(docs: DataFrame, textCol: String,
                    minWords: Int = 50, maxWords: Int = 100000): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(docs.sparkSession)
     docs.select((docs.columns.map(col).toSeq ++
         graft.operators.TextAnalysis.gopherCols(
           coalesce(col(textCol), lit("")), minWords, maxWords)): _*)
@@ -178,7 +177,6 @@ object EventStreams {
                    minTokens: Int = 10, maxStopwordRatio: Double = 1.0,
                    watermarkDelay: String = "10 minutes"): DataFrame = {
     import graft.operators.TextAnalysis
-    graft.functions.GraftFunctions.ensureRegistered(docs.sparkSession)
     val base = docs.withColumn("text", coalesce(col("text"), lit("")))
     val gated = base.select((base.columns.map(col).toSeq ++
         TextAnalysis.langScoreCols(col("text")) ++
@@ -255,7 +253,6 @@ object EventStreams {
     * Decontaminate.reportHashPrefiltered). */
   def benchmarkNgrams(benchmark: DataFrame, textCol: String, w: Int = 5,
                       maxVocab: Int = 200000): Seq[String] = {
-    graft.functions.GraftFunctions.ensureRegistered(benchmark.sparkSession)
     val rows = benchmark
       .select(explode(graft.functions.GraftFunctions.word_shingles(
         coalesce(col(textCol), lit("")), w)).as("sg"))
@@ -281,7 +278,6 @@ object EventStreams {
                           minShared: Int = 1): DataFrame = {
     require(w > 0 && minShared > 0,
       s"w/minShared must be positive, got ($w, $minShared)")
-    graft.functions.GraftFunctions.ensureRegistered(stream.sparkSession)
     val sh = graft.functions.GraftFunctions.word_shingles(
       coalesce(col(textCol), lit("")), w)
     stream
@@ -303,7 +299,6 @@ object EventStreams {
     * on it ("admit target-like docs at ingest"). */
   def dsirStream(stream: DataFrame, lamMicros: Array[Long],
                  textCol: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(stream.sparkSession)
     val t = coalesce(col(textCol), lit(""))
     val feats = concat(graft.operators.TextOps.tokens(t),
       graft.functions.GraftFunctions.word_ngrams(t, 2))
@@ -327,7 +322,6 @@ object EventStreams {
   def nbStream(stream: DataFrame,
                model: graft.operators.Classify.NbModelMicros,
                textCol: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(stream.sparkSession)
     val labels = model.labels
     val toks = graft.operators.TextOps.tokens(coalesce(col(textCol), lit("")))
     val scored = stream.withColumn("__sc",
@@ -357,7 +351,6 @@ object EventStreams {
   def centroidStream(stream: DataFrame, labelVals: Array[Any],
                      centroids: Array[Array[Double]],
                      vecCol: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(stream.sparkSession)
     val labelArr = array(labelVals.map(v => lit(v)).toIndexedSeq: _*)
     stream
       .withColumn("__sims", graft.functions.GraftFunctions.vec_mat_cosines(
@@ -673,7 +666,6 @@ object EventStreams {
   def embedDedupStream(stream: DataFrame, corpus: DataFrame, idCol: String,
                        vecCol: String, tau: Double, bits: Int = 16,
                        tables: Int = 8): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(stream.sparkSession)
     import graft.operators.{Dedup, Similarity}
     def prep(df: DataFrame, id: String, vec: String, nrm: String) =
       df.select(col(idCol).cast("long").as(id),
@@ -721,7 +713,6 @@ object EventStreams {
   def minhashDedupStream(stream: DataFrame, corpus: DataFrame, idCol: String,
                          textCol: String, tau: Double, numPerm: Int = 128,
                          bands: Int = 32): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(stream.sparkSession)
     def prep(df: DataFrame, id: String, sh: String, bnds: String) =
       df.select(col(idCol).cast("long").as(id),
         graft.functions.GraftFunctions.word_shingles(
@@ -761,7 +752,6 @@ object EventStreams {
                                   textCol: String, tag: String,
                                   tau: Double): DataFrame = {
     val spark = stream.sparkSession
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     import graft.operators.{Dedup, IndexStore}
     val (_, st) = Dedup.indexTables(tag)
     val ix = IndexStore.read(spark, Dedup.MinhashLayout, tag,
@@ -939,7 +929,6 @@ object EventStreams {
                                 vecCol: String, tag: String,
                                 tau: Double): DataFrame = {
     val spark = stream.sparkSession
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     import graft.operators.{Dedup, IndexStore, Similarity}
     val (_, vecT) = Dedup.embedIndexTables(tag)
     val ix = IndexStore.read(spark, Dedup.EmbedLayout, tag,

@@ -18,9 +18,9 @@ import org.apache.spark.sql.types.LongType
   */
 object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // the catalog is every query's entry point, so it also installs the
-    // native function surface (idempotent) — queries built from these
-    // scans can use expr("exact_percentile(...)") etc. unconditionally
+    // raw SQL over these scans (registerViews, the Table.query analog)
+    // resolves graft functions by name, so the catalog fills the session's
+    // registry (idempotent); Column handles need no registration
     graft.functions.GraftFunctions.ensureRegistered(spark)
     spark.read.parquet(s"$dir/$name.parquet")
   }

@@ -67,4 +67,29 @@ class PcaSpec extends SparkSpec {
     assert(math.abs(math.abs(out(0)._2) - 1.0) < 1e-3)
     assert(out.head._3 > 0.99)
   }
+
+  test("pc1 rejects an empty column, naming it") {
+    val df = Seq.empty[Tuple1[Array[Float]]].toDF("emb")
+    val e = intercept[IllegalArgumentException](Pca.pc1(df, "emb"))
+    assert(e.getMessage.contains("'emb'") && e.getMessage.contains("no rows"),
+      e.getMessage)
+  }
+
+  test("pc1 rejects a single row (no sample covariance), naming the column") {
+    val df = Seq(Tuple1(Array(1.0f, 2.0f, 3.0f))).toDF("emb")
+    val e = intercept[IllegalArgumentException](Pca.pc1(df, "emb"))
+    assert(e.getMessage.contains("'emb'") && e.getMessage.contains("at least 2 rows"),
+      e.getMessage)
+  }
+
+  test("pc1 rejects ragged vector lengths, naming the column") {
+    // a longer and a shorter vector than the first: both must be caught
+    for (odd <- Seq(Array(1.0f, 2.0f, 3.0f, 4.0f), Array(1.0f))) {
+      val df = Seq(Array(1.0f, 2.0f, 3.0f), Array(2.0f, 1.0f, 0.5f), odd,
+        Array(0.0f, 1.0f, 1.0f)).map(Tuple1(_)).toDF("emb")
+      val e = intercept[IllegalArgumentException](Pca.pc1(df, "emb"))
+      assert(e.getMessage.contains("'emb'") &&
+        e.getMessage.contains("different lengths"), e.getMessage)
+    }
+  }
 }
